@@ -8,11 +8,18 @@ native Column expressions — NO SQL-string codegen, NO temp views, NO UDFs:
   reference's single generated ``select``, ``SparkPlug.scala:98-107``);
 - rules fold sequentially, so rule k+1 observes rule k's writes
   (``SparkPlug.scala:42-50``);
-- Catalyst's ``CollapseProject`` fuses the whole rule chain into ONE
-  codegen'd projection — a narrow, shuffle-free map that scales linearly
-  to 100 TB (the reference needed checkpoint cadence because per-rule temp
-  views + UDF boundaries defeated fusion; we keep the cadence only as an
-  opt-in knob for 100+-rule chains, ``SparkPlug.scala:109-125``);
+- the optimized plan keeps one ``Project`` per rule: ``CollapseProject``
+  will not inline a rule whose condition several of its outputs reuse.
+  Whole-stage codegen then fuses that Project chain into ONE narrow,
+  shuffle-free stage (the reference needed checkpoint cadence because
+  per-rule temp views + UDF boundaries defeated fusion; we keep the
+  cadence only as an opt-in knob for 100+-rule chains,
+  ``SparkPlug.scala:109-125``);
+- each rule's update Columns are built by ONE helper shared by
+  :func:`apply_rule`, :meth:`SparkPlug.plug` and the validation dry run;
+  the Columns a fold rebuilds for every rule (``F.col(name)``, typed
+  nulls) are built once per fold, because every Column method costs a
+  dozen py4j round trips in PySpark 4.1 (call-site capture);
 - plug-details audit appends via ``concat(details, array(struct(...)))``
   gated on ``condition AND any value actually changed`` using null-safe
   equality (``PlugRule.scala:49-77``, ``SparkPlugUDFs.scala:14-31``);
@@ -73,9 +80,9 @@ class PlugRuleValidationException(Exception):
 @dataclass(frozen=True)
 class CheckpointConfig:
     """Lineage-control cadence (reference ``SparkPlugCheckpointDetails``,
-    ``SparkPlug.scala:14``, ``:109-125``).  Rarely needed here because the
-    fused rule chain collapses to one projection, but kept for very long
-    rule pipelines at large scale."""
+    ``SparkPlug.scala:14``, ``:109-125``).  Rarely needed here because
+    whole-stage codegen fuses the rule chain into one stage, but kept for
+    very long rule pipelines at large scale."""
 
     checkpoint_dir: str
     rules_per_stage: int
@@ -84,11 +91,12 @@ class CheckpointConfig:
 
 def default_details_entry(rule: PlugRule) -> Column:
     """Audit entry appended per matched rule — shape of ``PlugDetail``
-    (reference ``SparkPlugUDFs.scala:19-25``)."""
-    return F.struct(
-        F.lit(rule.name).alias("name"),
-        F.lit(rule.version).alias("version"),
-        F.array(*[F.lit(k) for k in rule.field_names]).alias("fieldNames"),
+    (reference ``SparkPlugUDFs.scala:19-25``).  ``named_struct`` takes its
+    field names as literals, so no per-field ``alias`` round trip."""
+    return F.named_struct(
+        F.lit("name"), F.lit(rule.name),
+        F.lit("version"), F.lit(rule.version),
+        F.lit("fieldNames"), F.array(*[F.lit(k) for k in rule.field_names]),
     )
 
 
@@ -104,6 +112,14 @@ class PlugDetailsConfig:
     entry_builder: Callable[[PlugRule], Column] = default_details_entry
 
 
+def _cast(c: Column, data_type: T.DataType) -> Column:
+    """``c.cast(data_type)``; an atomic type goes by its DDL string, which
+    skips the JSON round trip of a ``DataType`` (same Cast in the plan)."""
+    if isinstance(data_type, T.AtomicType):
+        return c.cast(data_type.simpleString())
+    return c.cast(data_type)
+
+
 def _value_column(
     action, data_type: T.DataType, lenient: bool
 ) -> Column:
@@ -112,17 +128,129 @@ def _value_column(
     if action.is_expression:
         return F.expr(action.expression)
     try:
-        return F.lit(coerce_action_value(action.value, data_type)).cast(data_type)
+        return _cast(F.lit(coerce_action_value(action.value, data_type)), data_type)
     except CoercionError:
         if lenient:
             # Reference quirk Q3: unvalidated coercion failure writes null
             # (PlugRule.scala:129).
-            return F.lit(None).cast(data_type)
+            return _null_of(data_type)
         raise
 
 
 def _null_of(data_type: T.DataType) -> Column:
-    return F.lit(None).cast(data_type)
+    return _cast(F.lit(None), data_type)
+
+
+class _FoldColumns:
+    """The Columns a fold rebuilds for every rule, built once per fold.
+
+    A name reference or a typed null is an unresolved, immutable
+    expression that resolves against whichever plan it lands in, so one
+    instance serves every rule of the fold."""
+
+    def __init__(self) -> None:
+        self._cols: dict[str, Column] = {}
+        self._nulls: dict[T.DataType, Column] = {}
+
+    def col(self, name: str) -> Column:
+        if name not in self._cols:
+            self._cols[name] = F.col(name)
+        return self._cols[name]
+
+    def null(self, data_type: T.DataType) -> Column:
+        if data_type not in self._nulls:
+            self._nulls[data_type] = _null_of(data_type)
+        return self._nulls[data_type]
+
+
+def _rule_updates(
+    rule: PlugRule,
+    fields: dict[str, T.DataType],
+    cols: _FoldColumns,
+    details_column: str | None = None,
+    details_entry_builder: Callable[[PlugRule], Column] = default_details_entry,
+    keep_old_field: bool = False,
+    lenient: bool = False,
+) -> dict[str, Column]:
+    """ONE rule's ``withColumns`` map: top-level column -> replacement.
+
+    Every expression reads the rule's INPUT columns (the reference computes
+    values, change predicates and the audit entry inside one select —
+    ``PlugRule.scala:49-77``).  ``fields`` maps each dotted path of the
+    input schema to its type."""
+    cond = F.expr(rule.condition)
+    value_cols: dict[str, Column] = {}
+    for action in rule.actions:
+        dt = fields.get(action.key)
+        if dt is None:
+            raise PlugRuleValidationException(
+                [
+                    PlugRuleValidationError(
+                        rule.name, f'Field "{action.key}" not found in the schema.'
+                    )
+                ]
+            )
+        try:
+            value_cols[action.key] = _value_column(action, dt, lenient)
+        except CoercionError:
+            raise PlugRuleValidationException(
+                [
+                    PlugRuleValidationError(
+                        rule.name,
+                        f'Value "{action.value}" cannot be assigned to '
+                        f"field {action.key}.",
+                    )
+                ]
+            ) from None
+
+    # Group actions by top-level column; build one replacement Column each.
+    by_parent: dict[str, list] = {}
+    for action in rule.actions:
+        by_parent.setdefault(action.update_key, []).append(action)
+
+    updates: dict[str, Column] = {}
+    for parent, actions in by_parent.items():
+        cur = cols.col(parent)
+        touched_nested = False
+        for action in actions:
+            v = value_cols[action.key]
+            if action.key == parent:
+                # whole-column override
+                cur = F.when(cond, v).otherwise(cur)
+            else:
+                # nested struct field, arbitrary depth via withField
+                # (fixes reference Q2/Q4 — PlugRule.scala:102-124 handled
+                # exactly 2 levels and collided on multi-action structs).
+                inner = action.key.split(".", 1)[1]
+                touched_nested = True
+                cur = cur.withField(
+                    inner, F.when(cond, v).otherwise(cols.col(action.key))
+                )
+        if touched_nested:
+            # Null parent stays null; the action does not materialize the
+            # struct (PlugRule.scala:111, SparkPlugSpec.scala:394).
+            cur = F.when(
+                cols.col(parent).isNull(), cols.null(fields[parent])
+            ).otherwise(cur)
+        updates[parent] = cur
+
+        if keep_old_field:
+            # <updateKey>_<ruleName>_old (PlugRule.scala:83,153; README:186-194)
+            updates[f"{parent}_{rule.name}_old"] = cols.col(parent)
+
+    if details_column is not None:
+        # Null-safe change gate: not(key <=> value)  (PlugRule.scala:58)
+        preds = [
+            ~cols.col(a.key).eqNullSafe(value_cols[a.key]) for a in rule.actions
+        ]
+        changed = reduce(lambda a, b: a | b, preds) if preds else F.lit(False)
+        details = cols.col(details_column)
+        updates[details_column] = F.when(
+            cond & changed,
+            F.concat(details, F.array(details_entry_builder(rule))),
+        ).otherwise(details)
+
+    return updates
 
 
 def apply_rule(
@@ -140,8 +268,8 @@ def apply_rule(
     ``select *, if(cond, v, col) as col_new, ... from __plug_table__`` plus
     the rename dance (``SparkPlug.scala:98-102``, ``PlugRule.scala:49-97``) —
     but expressed directly with ``withColumns`` so every expression reads the
-    rule's input row and Catalyst collapses consecutive rules into one
-    projection.
+    rule's input row.  Consecutive rules stay one ``Project`` each in the
+    optimized plan, and whole-stage codegen fuses them into one stage.
 
     ``fields`` is the dotted-path -> DataType map of ``df``'s schema; pass it
     when folding many rules so each step skips the ``df.schema`` analysis
@@ -153,82 +281,12 @@ def apply_rule(
     """
     if fields is None:
         fields = build_fields_map(df.schema)
-    cond = F.expr(rule.condition)
-    updates: dict[str, Column] = {}
-
-    # Pre-compute per-action value columns + change predicates against the
-    # INPUT columns (reference computes both inside the same select —
-    # PlugRule.scala:54-65).
-    value_cols: dict[str, Column] = {}
-    changed_preds: list[Column] = []
-    for action in rule.actions:
-        dt = fields.get(action.key)
-        if dt is None:
-            raise PlugRuleValidationException(
-                [
-                    PlugRuleValidationError(
-                        rule.name, f'Field "{action.key}" not found in the schema.'
-                    )
-                ]
-            )
-        try:
-            v = _value_column(action, dt, lenient)
-        except CoercionError:
-            raise PlugRuleValidationException(
-                [
-                    PlugRuleValidationError(
-                        rule.name,
-                        f'Value "{action.value}" cannot be assigned to '
-                        f"field {action.key}.",
-                    )
-                ]
-            ) from None
-        value_cols[action.key] = v
-        # Null-safe change gate: not(key <=> value)  (PlugRule.scala:58)
-        changed_preds.append(~F.col(action.key).eqNullSafe(v))
-
-    # Group actions by top-level column; build one replacement Column each.
-    by_parent: dict[str, list] = {}
-    for action in rule.actions:
-        by_parent.setdefault(action.update_key, []).append(action)
-
-    for parent, actions in by_parent.items():
-        parent_dt = fields[parent]
-        cur = F.col(parent)
-        touched_nested = False
-        for action in actions:
-            v = value_cols[action.key]
-            if action.key == parent:
-                # whole-column override
-                cur = F.when(cond, v).otherwise(cur)
-            else:
-                # nested struct field, arbitrary depth via withField
-                # (fixes reference Q2/Q4 — PlugRule.scala:102-124 handled
-                # exactly 2 levels and collided on multi-action structs).
-                inner = action.key.split(".", 1)[1]
-                touched_nested = True
-                cur = cur.withField(
-                    inner, F.when(cond, v).otherwise(F.col(action.key))
-                )
-        if touched_nested:
-            # Null parent stays null; the action does not materialize the
-            # struct (PlugRule.scala:111, SparkPlugSpec.scala:394).
-            cur = F.when(F.col(parent).isNull(), _null_of(parent_dt)).otherwise(cur)
-        updates[parent] = cur
-
-        if keep_old_field:
-            # <updateKey>_<ruleName>_old (PlugRule.scala:83,153; README:186-194)
-            updates[f"{parent}_{rule.name}_old"] = F.col(parent)
-
-    if details_column is not None:
-        changed = reduce(lambda a, b: a | b, changed_preds) if changed_preds else F.lit(False)
-        details = F.col(details_column)
-        updates[details_column] = F.when(
-            cond & changed,
-            F.concat(details, F.array(details_entry_builder(rule))),
-        ).otherwise(details)
-
-    return df.withColumns(updates)
+    return df.withColumns(
+        _rule_updates(
+            rule, fields, _FoldColumns(), details_column,
+            details_entry_builder, keep_old_field, lenient,
+        )
+    )
 
 
 def apply_rule_reference_compat(
@@ -512,24 +570,26 @@ class SparkPlug:
         # touches a stale path — the common all-literal chain stays O(rules).
         fields = build_fields_map(out.schema)
         stale: set[str] = set()
+        cols = _FoldColumns()
+        pd = self.plug_details
         for i, rule in enumerate(rules):
             if stale and any(
                 a.key in stale or a.update_key in stale for a in rule.actions
             ):
                 fields = build_fields_map(out.schema)
                 stale.clear()
-            out = apply_rule(
-                out,
-                rule,
-                details_column=self.plug_details.column if self.plug_details else None,
-                details_entry_builder=(
-                    self.plug_details.entry_builder
-                    if self.plug_details
-                    else default_details_entry
-                ),
-                keep_old_field=self.keep_old_field_enabled,
-                lenient=self.lenient,
-                fields=fields,
+            out = out.withColumns(
+                _rule_updates(
+                    rule,
+                    fields,
+                    cols,
+                    details_column=pd.column if pd else None,
+                    details_entry_builder=(
+                        pd.entry_builder if pd else default_details_entry
+                    ),
+                    keep_old_field=self.keep_old_field_enabled,
+                    lenient=self.lenient,
+                )
             )
             for a in rule.actions:
                 if a.is_expression:

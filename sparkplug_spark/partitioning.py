@@ -15,6 +15,7 @@ cluster utilization of everything downstream.
 from __future__ import annotations
 
 import math
+import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -116,7 +117,15 @@ def shuffle_scope(spark: SparkSession, n_partitions: int):
     # the batch frame's own session never see the outer query here.
     try:
         active = list(spark.streams.active)
-    except Exception:  # noqa: BLE001 - Connect backends may lack .streams
+    except Exception as e:  # noqa: BLE001 - Connect backends may lack .streams
+        # the guard falls open here; say so rather than skip it silently
+        warnings.warn(
+            "shuffle_scope: cannot list the session's active streaming "
+            f"queries ({type(e).__name__}: {e}); the active-stream guard "
+            "is skipped",
+            RuntimeWarning,
+            stacklevel=3,
+        )
         active = []
     if active:
         raise RuntimeError(

@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 from .models import PlugRule, PlugRuleValidationError
 
 if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql import SparkSession
+    from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "build_fields_map",
@@ -155,6 +155,20 @@ def _validate_structural(
     return errors
 
 
+def _dry_run(
+    empty: "DataFrame", fields: dict[str, T.DataType], rule: PlugRule
+) -> list[PlugRuleValidationError]:
+    from .engine import apply_rule  # local import to avoid cycle
+
+    try:
+        applied = apply_rule(empty, rule, details_column=None, fields=fields)
+        applied.schema  # force analysis
+    except Exception as e:  # AnalysisException and friends
+        msg = getattr(e, "desc", None) or str(e)
+        return [PlugRuleValidationError(rule.name, f"[SQL Error] {msg}")]
+    return []
+
+
 def validate_rule_sql(
     spark: "SparkSession", schema: T.StructType, rule: PlugRule
 ) -> list[PlugRuleValidationError]:
@@ -162,16 +176,7 @@ def validate_rule_sql(
     target schema and surface analysis errors (reference
     ``SparkPlug.scala:78-86``).  PySpark analyzes eagerly on ``withColumns``,
     so a ``try`` suffices; no job runs (empty local relation)."""
-    from .engine import apply_rule  # local import to avoid cycle
-
-    empty = spark.createDataFrame([], schema)
-    try:
-        applied = apply_rule(empty, rule, details_column=None)
-        applied.schema  # force analysis
-    except Exception as e:  # AnalysisException and friends
-        msg = getattr(e, "desc", None) or str(e)
-        return [PlugRuleValidationError(rule.name, f"[SQL Error] {msg}")]
-    return []
+    return _dry_run(spark.createDataFrame([], schema), build_fields_map(schema), rule)
 
 
 def validate_rules(
@@ -181,11 +186,31 @@ def validate_rules(
 ) -> list[PlugRuleValidationError]:
     """Full validation pass.  The SQL dry-run runs only when structural
     validation is clean AND a SparkSession is supplied
-    (reference ``SparkPlug.scala:67-76``)."""
+    (reference ``SparkPlug.scala:67-76``).
+
+    The dry run analyzes every rule at once: one empty frame, one
+    ``select`` of every rule's update expressions, each under its own
+    alias.  Each rule reads the input schema, as in
+    :func:`validate_rule_sql`, so when that one analysis succeeds every
+    rule's own dry run succeeds too.  Only when it fails are the rules
+    dry-run one by one over the same frame, which reports each error as
+    :func:`validate_rule_sql` would."""
     errors = _validate_structural(schema, rules)
-    if errors or spark is None:
+    if errors or spark is None or not rules:
         return errors
-    out: list[PlugRuleValidationError] = []
-    for rule in rules:
-        out.extend(validate_rule_sql(spark, schema, rule))
-    return out
+    from .engine import _FoldColumns, _rule_updates  # local import to avoid cycle
+
+    empty = spark.createDataFrame([], schema)
+    fields = build_fields_map(schema)
+    try:
+        cols = _FoldColumns()
+        empty.select(
+            *(
+                c.alias(f"{i}:{name}")
+                for i, rule in enumerate(rules)
+                for name, c in _rule_updates(rule, fields, cols).items()
+            )
+        ).schema
+    except Exception:  # noqa: BLE001 - the per-rule pass names the error
+        return [e for rule in rules for e in _dry_run(empty, fields, rule)]
+    return []

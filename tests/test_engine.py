@@ -444,9 +444,9 @@ def test_rule_value_window_function(spark):
 
 
 def test_long_rule_chain_fuses_and_computes(spark):
-    """60 sequential rules: the fold must stay ONE codegen'd projection
-    (CollapseProject at depth), apply in order (rule k+1 sees rule k's
-    write), and finish plan construction fast (the one-schema-analysis
+    """60 sequential rules: the fold must stay ONE codegen'd stage
+    (whole-stage codegen fuses the per-rule Projects), apply in order
+    (rule k+1 sees rule k's write), and finish plan construction fast (the one-schema-analysis
     fold — per-rule analysis would be O(rules^2) py4j round-trips)."""
     import re as _re
     import time

@@ -7,7 +7,8 @@ The one legitimate overlap — loops inside a foreachBatch writer — works
 because Structured Streaming binds the batch frame to a PER-BATCH CLONED
 session whose streams.active is empty; the third test pins that Spark
 behavior so an upgrade that changes it fails loudly here rather than
-silently re-opening the hazard.
+silently re-opening the hazard.  On a session that cannot list its
+streams the guard cannot run, and the scope must warn that it skipped it.
 """
 
 import os
@@ -96,3 +97,29 @@ def test_foreachbatch_clone_session_scopes_fine(spark):
     assert seen["inner"] == "2"
     assert seen["outer"] == "4"  # outer session untouched by the scope
     assert seen["rows"] == 10
+
+
+class _NoStreamsSession:
+    """A session whose ``streams`` raises, as on a backend without it."""
+
+    class _Conf(dict):
+        def get(self, key, default=None):
+            return super().get(key, default)
+
+        def set(self, key, value):
+            self[key] = value
+
+    def __init__(self):
+        self.conf = self._Conf({"spark.sql.shuffle.partitions": "4"})
+
+    @property
+    def streams(self):
+        raise AttributeError("streams is not supported here")
+
+
+def test_scope_warns_when_stream_guard_is_skipped():
+    s = _NoStreamsSession()
+    with pytest.warns(RuntimeWarning, match="active-stream guard is skipped"):
+        with shuffle_scope(s, 2):
+            assert s.conf.get("spark.sql.shuffle.partitions") == "2"
+    assert s.conf.get("spark.sql.shuffle.partitions") == "4"
